@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every declared query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
@@ -19,18 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304") // see functions/TopKAgg.scala scaladoc
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
 
     // warm-up passes of the IO + codegen paths so per-query timings
     // measure the operators, not first-touch JIT/classloading. One
@@ -253,10 +240,11 @@ object Bench {
     // BENCH_r{N}.json keeps only a truncated stdout tail (~59 of 139
     // per-query times survived in r13), so the bench also writes the
     // full line itself — round-over-round per-query diffs need every
-    // key. Repo-relative; round tag from the env with a bumpable
-    // default.
+    // key. Repo-relative; round tag from the env. Unset, the tag is
+    // `dev` (git-ignored), so an ad-hoc run never overwrites a
+    // committed round artifact.
     try {
-      val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "r19")
+      val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "dev")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"bench_local_$round.json"), line)
     } catch { case e: Throwable =>

@@ -1,25 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  *
+  * Usage: `Verify <sfDir> <outDir> [q1,q2,...]`. The optional third
+  * argument dumps only the named queries (a dev subset; the full gate
+  * passes two args). A name that is not a declared query is rejected
+  * before the session starts, so a typo cannot dump nothing and still
+  * pass. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [comma-list of query names — dev-only
-    // subset filter; the driver always passes two args]
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304") // see functions/TopKAgg.scala scaladoc
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    only.foreach { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty,
+        s"undeclared query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    val spark = Session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

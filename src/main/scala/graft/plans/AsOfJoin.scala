@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, JoinedRow, SortOrder, UnsafeProjection, Ascending, GenericInternalRow}
@@ -132,24 +132,15 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: logical AsOfJoin → AsOfJoinExec. */
+/** Planner strategy: logical AsOfJoin → AsOfJoinExec. [[AsOf.join]]
+  * installs it on the session it is called with
+  * ([[AsOf.ensureRegistered]]), so no session extension is needed. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j @ AsOfJoin(l, r, lk, rk, lt, rt) =>
       AsOf.validateTypes(j)  // belt-and-braces: AsOf.join checks eagerly
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
     case _ => Nil
-  }
-}
-
-/** Session extension registering the engine's planner strategy and
-  * optimizer rule:
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => HammingProbeRewrite)
   }
 }
 
@@ -210,6 +201,8 @@ object AsOf {
     sameType("time", j.leftTime, j.rightTime)
   }
 
+  /** Idempotently appends [[AsOfJoinStrategy]] to the session's
+    * extra planner strategies. */
   def ensureRegistered(spark: SparkSession): Unit = {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
       spark.experimental.extraStrategies =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for [[graft.ops.Graph.connectedComponents]]: a synthetic
@@ -26,14 +25,7 @@ object CCScaleProbe {
     if (args.headOption.contains("star")) { starMain(args); return }
     val nRings = args.headOption.map(_.toInt).getOrElse(200000)
     val ringSize = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-cc-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-cc-scale")
 
     val n = nRings.toLong * ringSize
     // ring edges: (id, next-in-ring) — id i links to i+1 except the
@@ -62,14 +54,7 @@ object CCScaleProbe {
 
   private def starMain(args: Array[String]): Unit = {
     val nSpokes = args.lift(1).map(_.toInt).getOrElse(2000000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-cc-star")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-cc-star")
     // hub 0 — every edge touches it; every node must label to 0
     val edges = spark.range(1, nSpokes + 1)
       .select(lit(0L).as("id_a"), org.apache.spark.sql.functions.col("id").as("id_b"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.stream.{CdcReplay, EngagementPipeline, Snapshots}
 
 /** CDC merge-on-read soak (VERDICT r4 "next round" #3): streams keyed
@@ -67,13 +66,8 @@ object CdcSoakProbe {
     val state = s"$base/state"; val ckpt = s"$base/ckpt"
     Files.createDirectories(Paths.get(drop))
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("cdc-soak-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.fileSource.log.compactInterval", "20")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("cdc-soak-probe",
+      "spark.sql.streaming.fileSource.log.compactInterval" -> "20")
 
     val compactions = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
     val raw = EngagementPipeline.fileSource(spark, drop)

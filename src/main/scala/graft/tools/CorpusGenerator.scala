@@ -105,11 +105,7 @@ object CorpusGenerator {
 
   def main(args: Array[String]): Unit = {
     val Array(outDir, n) = args.take(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-corpus-generator")
     write(spark, outDir, n.toLong)
     println(s"""{"metric":"corpus","docs":$n,"dir":"$outDir"}""")
     spark.stop()

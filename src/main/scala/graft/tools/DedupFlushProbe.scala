@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
@@ -32,13 +31,7 @@ object DedupFlushProbe {
     val waveSize = args.drop(1).headOption.map(_.toInt).getOrElse(2500)
     val root = Files.createTempDirectory("graft_flush_probe").toString
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("dedup-flush-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("dedup-flush-probe")
     graft.stream.EngagementPipeline.useRocksDBStateStore(spark)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

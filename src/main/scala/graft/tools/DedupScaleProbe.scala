@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scaling-curve harness for the dedup pipeline (VERDICT r3 "next
@@ -23,32 +21,6 @@ import java.nio.file.{Files, Paths}
   */
 object DedupScaleProbe {
 
-  /** Per-stage task-metric aggregation (driver-side listener — metrics
-    * only, no data). */
-  final class MetricsListener extends SparkListener {
-    @volatile var spillBytes = 0L
-    @volatile var shuffleWriteBytes = 0L
-    @volatile var maxTaskMs = 0L
-    @volatile var failedTasks = 0
-    @volatile var tasks = 0
-    // synchronized on the same lock as onTaskEnd: a straggler task-end
-    // racing an unsynchronized reset could resurrect pre-reset counts
-    // into the new sample (callers also drain the listener bus first,
-    // but the lock makes the discipline unconditional)
-    def reset(): Unit = synchronized { spillBytes = 0; shuffleWriteBytes = 0
-      maxTaskMs = 0; failedTasks = 0; tasks = 0 }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-      tasks += 1
-      if (!te.reason.toString.startsWith("Success")) failedTasks += 1
-      val m = te.taskMetrics
-      if (m != null) {
-        spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-        shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-        maxTaskMs = math.max(maxTaskMs, te.taskInfo.duration)
-      }
-    }
-  }
-
   val Stages = Seq("q_dedup_exact", "q_minhash_dedup", "q_dedup_clusters",
     "q_corpus_select_dedup")
 
@@ -59,15 +31,8 @@ object DedupScaleProbe {
     val baseDocs = 5000L // sf0.1 documents row count
     val baseDir = sys.env.getOrElse("DEDUP_SCALE_DIR", "/tmp/dedup_scale")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("dedup-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = graft.Session("dedup-scale-probe")
+    val listener = StageMeter.install(spark)
 
     val results = scales.map { scale =>
       val nDocs = baseDocs * scale
@@ -82,10 +47,7 @@ object DedupScaleProbe {
         val t0 = System.nanoTime()
         val rows = df.queryExecution.toRdd.count()
         val sec = (System.nanoTime() - t0) / 1e9
-        // task-end events are delivered asynchronously; without a
-        // drain the final straggler task can be missing from the
-        // metrics this probe exists to record
-        org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+        listener.drain()
         spark.sharedState.cacheManager.clearCache()
         System.gc()
         println(f"[scale x$scale] $name%-24s $sec%8.1f s  rows=$rows%-9d " +
@@ -105,7 +67,7 @@ object DedupScaleProbe {
       s"""{"scale":$scale,"docs":$nDocs,"gen_sec":${f"$genSec%.2f"},"stages":{$stageJson}}"""
     }
 
-    val json = s"""{"metric":"dedup_scale","base_docs":$baseDocs,"cpus":32,""" +
+    val json = s"""{"metric":"dedup_scale","base_docs":$baseDocs,"cpus":${graft.Session.cores},""" +
       s""""runs":[${results.mkString(",")}]}"""
     Files.writeString(Paths.get(outJson), json)
     println(json)

@@ -55,13 +55,7 @@ object DedupSoakMulti {
     val ckpt = s"$root/ckpt" // ONE checkpoint across all sessions
 
     def newSession(): SparkSession = {
-      val s = SparkSession.builder().master("local[32]")
-        .appName("dedup-soak-multi")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = graft.Session("dedup-soak-multi")
       graft.stream.EngagementPipeline.useRocksDBStateStore(s)
       s
     }

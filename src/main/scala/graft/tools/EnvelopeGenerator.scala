@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   * .fileSource]] consumes. All fields derive from the event id, so any
   * run is reproducible and downstream counts are exactly predictable
   * (ids with `id % 19 == 0` carry op `u` and are dropped by the CDC
-  * filter — the same fixture contract StreamThroughput uses).
+  * filter — the same fixture contract StreamSmoke and Soak use).
   *
   * Usage (standalone):
   *   sbt "runMain graft.tools.EnvelopeGenerator <outDir> <eventsPerSec> <seconds>"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Ivf
 
@@ -32,11 +31,7 @@ object FilteredAnnProbe {
     val clusters = 64
     val bigK = 64
     val topK = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-filtered-ann-probe")
     import spark.implicits._
 
     def time[A](f: => A): (A, Double) = {

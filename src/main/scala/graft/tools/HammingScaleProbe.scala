@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 
 /** Third-decade scale probe for the media near-dup CLUSTER operator
@@ -21,11 +19,11 @@ import java.nio.file.{Files, Paths}
   * (deterministically, for this seed) absent.
   *
   * Per arm it records the cluster-build wall and the shuffle-write
-  * bytes (a stage-completion listener — the PipelineScaleProbe
-  * meter), and the merge computes per-unit ratios between
-  * consecutive arms. The 100 TB claim: shuffle grows linearly in the
-  * signature count (band keys + rep edges + label joins, never a
-  * pair space), so per-unit must hold ≤ ~1.2 across the decade.
+  * bytes (a [[StageMeter]]), and the merge computes per-unit ratios
+  * between consecutive arms. The 100 TB claim: shuffle grows
+  * linearly in the signature count (band keys + rep edges + label
+  * joins, never a pair space), so per-unit must hold ≤ ~1.2 across
+  * the decade.
   *
   * Usage: sbt "runMain graft.tools.HammingScaleProbe [sizes] [outJson]"
   * (default sizes 300000,999999,3000000 — one full decade above
@@ -36,19 +34,10 @@ object HammingScaleProbe {
     val sizes = args.headOption.getOrElse("300000,999999,3000000")
       .split(",").map(_.trim.toInt).toSeq
     val outJson = args.drop(1).headOption.getOrElse("HAMMING_SCALE.json")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-hamming-scale-probe")
     import spark.implicits._
 
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-        bytes.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = StageMeter.install(spark)
 
     val runs = sizes.map { n =>
       require(n % 3 == 0, s"n=$n must be a multiple of 3 (groups of 3)")
@@ -78,14 +67,13 @@ object HammingScaleProbe {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sigs.count() // fixture materialization, untimed below
 
-      Thread.sleep(300)
-      val b0 = bytes.get()
+      meter.reset()
       val t0 = System.nanoTime()
       val clusters = graft.ops.HammingDedup.clusters64(
         sigs, "media_id", "sig")
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let stage-completion events drain
-      val by = bytes.get() - b0
+      meter.drain()
+      val by = meter.shuffleWriteBytes
 
       // ground truth: n/3 clusters, each of size 3, labeled min-id.
       // The operator is exact UNLESS a (band, key) bucket exceeds

@@ -47,14 +47,7 @@ object HtmlScaleProbe {
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-html-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-html-scale")
     import graft.ops.Html
 
     val base = 100000L

@@ -35,11 +35,7 @@ object ImageDedupScaleProbe {
     val sizes = args.headOption.getOrElse("30000,100000,300000")
       .split(",").map(_.trim.toInt).toSeq
     val outJson = args.drop(1).headOption.getOrElse("IMG_NEARDUP_SCALE.json")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-image-dedup-scale-probe")
     import spark.implicits._
 
     def time[A](f: => A): (A, Double) = {

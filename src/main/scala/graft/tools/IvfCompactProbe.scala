@@ -56,11 +56,7 @@ object IvfCompactProbe {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(60)
     val rowsPerBatch = args.lift(1).map(_.toInt).getOrElse(2000)
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-ivf-compact-probe")
     import spark.implicits._
 
     val tmp = java.nio.file.Files.createTempDirectory("ivfcompact").toString

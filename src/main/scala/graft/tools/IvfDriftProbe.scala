@@ -45,11 +45,7 @@ object IvfDriftProbe {
     val bigK = 64
     val nProbe = 2
     val delta = 1.5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-ivf-drift-probe")
     import spark.implicits._
 
     def time[A](f: => A): (A, Double) = {

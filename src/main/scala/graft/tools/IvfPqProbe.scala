@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.{Ivf, Pq}
@@ -40,13 +39,7 @@ object IvfPqProbe {
     val dir = s"${sys.env.getOrElse("VEC_SCALE_DIR", "/tmp/vec_scale")}/n$n"
     val nQueries = 64
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("ivfpq-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("ivfpq-probe")
     import spark.implicits._
 
     if (!new java.io.File(s"$dir/embeddings.parquet").exists())

@@ -101,18 +101,7 @@ object IvfSoakMulti {
     val rebuildDir = s"$root/rebuild"
     new java.io.File(incoming).mkdirs()
 
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder().master("local[32]")
-        .appName("ivf-soak-multi")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          "4194304")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def newSession(): SparkSession = graft.Session("ivf-soak-multi")
 
     // wave w drifts iff it belongs to the LAST session
     def waveDrifted(w: Int): Boolean = w >= (sessions - 1) * wavesPerSession

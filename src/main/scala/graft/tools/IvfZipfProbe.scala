@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.Ivf
@@ -53,26 +53,20 @@ object IvfZipfProbe {
     val outJson = args.lift(2).getOrElse("IVF_ZIPF.json")
     val baseDir = sys.env.getOrElse("IVF_ZIPF_DIR", s"/tmp/ivf_zipf/n$n")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("ivf-zipf-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // 512 MB over 32 files coalesces to ~4 input partitions at the
-      // default 128 MB split — 16 MB splits keep the map-side fit at
-      // full local width (see VecDimProbe; cluster default is right)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 512 MB over 32 files coalesces to ~4 input partitions at the
+    // default 128 MB split — 16 MB splits keep the map-side fit at
+    // full local width (see VecDimProbe; cluster default is right)
+    val spark = graft.Session("ivf-zipf-probe",
+      "spark.sql.files.maxPartitionBytes" -> s"${16 * 1024 * 1024}")
     import spark.implicits._
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = StageMeter.install(spark)
 
     def timed[T](tag: String)(body: => T): (T, Double, Long) = {
       listener.reset()
       val t0 = System.nanoTime()
       val r = body
       val sec = (System.nanoTime() - t0) / 1e9
+      listener.drain()
       println(f"[zipf s=$zipfS n=$n] $tag%-18s $sec%8.2f s  " +
         f"maxTaskMs=${listener.maxTaskMs} failed=${listener.failedTasks}")
       (r, sec, listener.maxTaskMs)
@@ -209,7 +203,7 @@ object IvfZipfProbe {
 
     val json = s"""{"metric":"ivf_zipf","n":$n,"zipf_s":$zipfS,""" +
       s""""clusters":$NClusters,"k_cells":$KCells,"n_probe":$NProbe,""" +
-      s""""n_queries":$NQueries,"cpus":32,""" +
+      s""""n_queries":$NQueries,"cpus":${graft.Session.cores},""" +
       s""""top_cluster_rows":${labelMass.head._2},""" +
       s""""split_cap_share":0.02,"split_cells_total":${expanded.length},""" +
       s"""$refitJson,$staleJson,$splitJson}"""

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Ivf, Util}
@@ -31,38 +30,9 @@ object KnnScaleProbe {
     val outJson = args.drop(1).headOption.getOrElse("KNN_SCALE.json")
     val baseDir = sys.env.getOrElse("KNN_SCALE_DIR", "/tmp/knn_scale")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("knn-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("KNN_SCALE_FALLBACK", "4194304"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    // KNN_SCALE_DEBUG=1: per-stage task spread, to localize stragglers
-    if (sys.env.contains("KNN_SCALE_DEBUG"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val maxMs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          private val nTask = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            maxMs.merge(te.stageId, te.taskInfo.duration, math.max(_, _))
-            nTask.merge(te.stageId, 1, _ + _)
-          }
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            println(s"[stage ${si.stageId}] ${si.name.takeWhile(_ != '\n').take(80)} " +
-              s"tasks=${nTask.getOrDefault(si.stageId, 0)} " +
-              s"maxTaskMs=${maxMs.getOrDefault(si.stageId, 0L)} " +
-              s"wallMs=${si.completionTime.getOrElse(0L).asInstanceOf[Long] -
-                si.submissionTime.getOrElse(0L).asInstanceOf[Long]}")
-          }
-        })
+    val spark = graft.Session("knn-scale-probe", sys.env.get("KNN_SCALE_FALLBACK")
+      .map(graft.functions.ConfGuard.ThresholdKey -> _).toSeq: _*)
+    val listener = StageMeter.install(spark)
 
     val results = sizes.map { n =>
       val dir = s"$baseDir/n$n"
@@ -110,7 +80,7 @@ object KnnScaleProbe {
         .agg(count(lit(1)), sum(col("ok"))).head()
         .toSeq.map(_.toString.toLong).toArray
       val knnSec = (System.nanoTime() - tKnn) / 1e9
-      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+      listener.drain()
       spark.sharedState.cacheManager.clearCache()
       val acc = nOk.toDouble / math.max(1L, nClassified)
       println(f"[n=$n] kCells=$kCells fit $fitSec%.1f s  knn $knnSec%.1f s  " +

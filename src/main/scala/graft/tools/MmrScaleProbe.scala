@@ -2,9 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** q_mmr_batch SCALE artifact (VERDICT r14 #7): the top bench wall is
   * brand-new — probe its wall against QUERY COUNT on a FIXED corpus
   * and pin the two structural claims with measured bytes:
@@ -26,29 +23,10 @@ import org.apache.spark.sql.SparkSession
   */
 object MmrScaleProbe {
 
-  private final class IoMeter extends SparkListener {
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
-    val input = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-      shuffle.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      input.addAndGet(ev.stageInfo.taskMetrics.inputMetrics.bytesRead)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.map(_.toLong).getOrElse(160000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-mmr-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new IoMeter
-    spark.sparkContext.addSparkListener(meter)
+    val spark = graft.Session("graft-mmr-scale")
+    val meter = StageMeter.install(spark)
     val root = Files.createTempDirectory("graft_mmr_scale").toString
     ProbeCorpus.writeCorpus(spark, root, base)
     val docs = spark.read.parquet(s"$root/documents.parquet")
@@ -57,8 +35,7 @@ object MmrScaleProbe {
       val reps = (0 until 2).map { _ =>
         spark.sharedState.cacheManager.clearCache()
         System.gc()
-        Thread.sleep(300)
-        val s0 = meter.shuffle.get(); val i0 = meter.input.get()
+        meter.reset()
         val t0 = System.nanoTime()
         val out = graft.ops.Retrieval.mmrBatch(docs, queryMod = mod)
         // ONE action: running the frame twice would double-count the
@@ -69,9 +46,8 @@ object MmrScaleProbe {
             org.apache.spark.sql.functions.lit(1))).head
         val (nQueries, nRows) = (agg.getLong(0), agg.getLong(1))
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        (sec, meter.shuffle.get() - s0, meter.input.get() - i0,
-          nQueries, nRows)
+        meter.drain()
+        (sec, meter.shuffleWriteBytes, meter.inputBytes, nQueries, nRows)
       }
       val wall = reps.map(_._1).min
       val (_, shuf, in, nQ, nR) = reps.head

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,14 +30,7 @@ object PackScaleProbe {
     val sizes =
       if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(10000000L, 50000000L, 100000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-pack-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-pack-scale")
     val C = 2048
 
     val results = sizes.map { n =>

@@ -2,40 +2,13 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** FACADE-LEVEL scale probe (VERDICT r12 #3): the individual curation
-  * stages each have scale artifacts, but [[graft.CorpusPipeline]]'s
-  * one-call arc — the composed product — was unmeasured. Runs the arc
-  * with extraction ON over block-structured synthetic corpora (the
-  * generator below: realistic 50k vocabulary + stopwords + exact and
-  * near duplicates, wrapped in the declared HTML fixture) at
-  * 1×/3×/10× of a 100k-doc base, recording per-stage wall and
-  * shuffle-write bytes, and emits a linear-or-better / superlinear
-  * verdict per stage.
-  *
-  * Stage decomposition vs the facade's fused plan: the selection
-  * stage deliberately computes quality gates, dedup keepers and
-  * decontamination off ONE text scan (the one-scan guarantee PlanSpec
-  * pins), so the probe recovers per-stage costs through the session
-  * memo's ordering — `leakageSplit` is called FIRST and pays the
-  * tokenize + MinHash + connected-components assignment
-  * (`cc_dedup`); `corpusPipelineKeepers` then reuses that memo, so
-  * its wall is the feature/quality scan + decontamination joins
-  * (`quality_decon`); `split` and `pack` time their own increments.
-  * Shuffle bytes come from a stage-completion listener snapshot
-  * around each stage (listener delivery is async — a short settle
-  * wait follows every stage).
-  *
-  * Usage: sbt "runMain graft.tools.PipelineScaleProbe [baseDocs]"
-  * (default 100000; scales ×1/×3/×10). Writes PIPELINE_SCALE.json.
-  */
 /** The realistic-corpus generator SHARED by [[PipelineScaleProbe]]
-  * and [[DiagKeepers]] (ADVICE r13: a hand-copied duplicate could
-  * silently drift, and the diag tool would then measure a different
-  * corpus than the probe).
+  * and [[MmrScaleProbe]] (ADVICE r13: a hand-copied duplicate could
+  * silently drift, and the probes would then measure different
+  * corpora; the keeper diagnostics run on it are in NOTES_r14).
   *
   * [[CorpusGenerator]]'s 30-word vocabulary is deliberately tiny for
   * the dedup probes, but it is the WRONG corpus for the full arc:
@@ -94,16 +67,35 @@ private[tools] object ProbeCorpus {
   }
 }
 
+/** FACADE-LEVEL scale probe (VERDICT r12 #3): the individual curation
+  * stages each have scale artifacts, but [[graft.CorpusPipeline]]'s
+  * one-call arc — the composed product — was unmeasured. Runs the arc
+  * with extraction ON over block-structured synthetic corpora
+  * ([[ProbeCorpus]]: realistic 50k vocabulary + stopwords + exact and
+  * near duplicates, wrapped in the declared HTML fixture) at
+  * 1×/3×/10× of a 100k-doc base, recording per-stage wall and
+  * shuffle-write bytes, and emits a linear-or-better / superlinear
+  * verdict per stage.
+  *
+  * Stage decomposition vs the facade's fused plan: the selection
+  * stage deliberately computes quality gates, dedup keepers and
+  * decontamination off ONE text scan (the one-scan guarantee PlanSpec
+  * pins), so the probe recovers per-stage costs through the session
+  * memo's ordering — `leakageSplit` is called FIRST and pays the
+  * tokenize + MinHash + connected-components assignment
+  * (`cc_dedup`); `corpusPipelineKeepers` then reuses that memo, so
+  * its wall is the feature/quality scan + decontamination joins
+  * (`quality_decon`); `split` and `pack` time their own increments.
+  * Shuffle bytes come from a [[StageMeter]] reset before each stage
+  * and drained after it.
+  *
+  * Usage: sbt "runMain graft.tools.PipelineScaleProbe [baseDocs]"
+  * (default 100000; scales ×1/×3/×10). Writes PIPELINE_SCALE.json.
+  */
 object PipelineScaleProbe {
 
-  private final class ShuffleMeter extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
-
   /** Total JVM garbage-collection wall seconds so far (all
-    * collectors). On local[32] the driver JVM IS the executor JVM, so
+    * collectors). In local mode the driver JVM IS the executor JVM, so
     * a per-stage delta of this counter is the stage's measured GC
     * seconds — the attribution VERDICT r17 #1 asked for (the 100×
     * qd_decon_join wall spread was HYPOTHESIZED as GC/scheduling
@@ -145,8 +137,7 @@ object PipelineScaleProbe {
         val s = args(1).toInt
         val base = args.drop(2).headOption.map(_.toLong).getOrElse(100000L)
         val spark = buildSession()
-        val meter = new ShuffleMeter
-        spark.sparkContext.addSparkListener(meter)
+        val meter = StageMeter.install(spark)
         val root = Files.createTempDirectory("graft_pipeline_scale").toString
         val row = runScale(spark, meter, root, base, s)
         Files.writeString(partialPath(s), rowJson(row))
@@ -170,8 +161,7 @@ object PipelineScaleProbe {
       case _ =>
         val base = args.headOption.map(_.toLong).getOrElse(100000L)
         val spark = buildSession()
-        val meter = new ShuffleMeter
-        spark.sparkContext.addSparkListener(meter)
+        val meter = StageMeter.install(spark)
         val root = Files.createTempDirectory("graft_pipeline_scale").toString
         val rows = Seq(1, 3, 10, 30).map(s =>
           runScale(spark, meter, root, base, s))
@@ -179,9 +169,8 @@ object PipelineScaleProbe {
           Seq.fill(rows.size)(Runtime.getRuntime.maxMemory / 1073741824.0),
           // honor SPARK_GRAFT_SHUFFLE_PARTS here too (ADVICE r16): the
           // single-JVM arm builds its session from the same env knob,
-          // so a constant 32 would misname an overridden regime
-          Seq.fill(rows.size)(
-            sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32").toInt))
+          // so a constant would misname an overridden regime
+          Seq.fill(rows.size)(shufflePartitions.toInt))
         spark.stop()
     }
   }
@@ -198,7 +187,7 @@ object PipelineScaleProbe {
       f"""{"stage":"$nm","sec":$sec%.2f,"shuffle_bytes":$by,"shuffle_mb":${by / 1048576.0}%.1f,"gc_sec":$gc%.2f}"""
     }.mkString("[", ",", "]")
     val heapGb = Runtime.getRuntime.maxMemory / 1073741824.0
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32")
+    val parts = shufflePartitions
     // the footprint-lever knobs are part of the artifact's identity —
     // an A/B partial must name its regime (r18 reporting discipline)
     val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
@@ -234,38 +223,29 @@ object PipelineScaleProbe {
       n.get("packed_docs").asLong(), stages)
   }
 
-  private def buildSession(): SparkSession = {
-    // SPARK_GRAFT_SHUFFLE_PARTS: the per-scale partition count of the
-    // memory-per-row-constant lane (VERDICT r15 #2). On a fixed-32-
-    // partition local box, per-task hash-agg group cardinality grows
-    // with the corpus — a wall term a real cluster never sees because
-    // partitions scale with data (the DiagDecon `parts` knob,
-    // NOTES_r14). The lane scales this with the data (recorded per
-    // partial as shuffle_partitions); shuffle BYTES stay
-    // plan-determined either way.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32")
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-pipeline-scale")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304")
-      .config("spark.ui.enabled", "false")
-    // footprint-lever A/B knobs (r18 verdict #3): shuffle/spill codec
-    // and parquet write codec — fewer bytes through the page cache is
-    // the one lever that could touch the 100× arm's kernel-time
-    // regime without changing any plan
-    sys.env.get("SPARK_GRAFT_IO_CODEC")
-      .foreach(c => b.config("spark.io.compression.codec", c))
-    sys.env.get("SPARK_GRAFT_PARQUET_CODEC")
-      .foreach(c => b.config("spark.sql.parquet.compression.codec", c))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** SPARK_GRAFT_SHUFFLE_PARTS: the per-scale partition count of the
+    * memory-per-row-constant lane (VERDICT r15 #2). On a fixed-
+    * partition local box, per-task hash-agg group cardinality grows
+    * with the corpus — a wall term a real cluster never sees because
+    * partitions scale with data (the decontamination `parts` knob,
+    * NOTES_r14). The lane scales this with the data (recorded per
+    * partial as shuffle_partitions); shuffle BYTES stay
+    * plan-determined either way. Unset, the session default. */
+  private def shufflePartitions: String = sys.env.getOrElse(
+    "SPARK_GRAFT_SHUFFLE_PARTS", graft.Session.cores.toString)
 
-  private def runScale(spark: SparkSession, meter: ShuffleMeter,
+  // footprint-lever A/B knobs (r18 verdict #3): shuffle/spill codec
+  // and parquet write codec — fewer bytes through the page cache is
+  // the one lever that could touch the 100× arm's kernel-time
+  // regime without changing any plan
+  private def buildSession(): SparkSession = graft.Session(
+    "graft-pipeline-scale",
+    Seq("spark.sql.shuffle.partitions" -> shufflePartitions) ++
+      sys.env.get("SPARK_GRAFT_IO_CODEC").map("spark.io.compression.codec" -> _) ++
+      sys.env.get("SPARK_GRAFT_PARQUET_CODEC")
+        .map("spark.sql.parquet.compression.codec" -> _): _*)
+
+  private def runScale(spark: SparkSession, meter: StageMeter,
       root: String, base: Long, s: Int): ScaleRow = {
     import graft.ops.{Html, TextOps}
     import graft.io.Tables
@@ -273,14 +253,14 @@ object PipelineScaleProbe {
     def staged[A](
         out: collection.mutable.ArrayBuffer[(String, Double, Long, Double)],
         name: String)(body: => A): A = {
-      val b0 = { Thread.sleep(300); meter.bytes.get() }
+      meter.reset()
       val g0 = gcSeconds()
       val t0 = System.nanoTime()
       val r = body
       val sec = (System.nanoTime() - t0) / 1e9
       val gc = gcSeconds() - g0
-      Thread.sleep(300) // let stage-completion events drain
-      out += ((name, sec, meter.bytes.get() - b0, gc))
+      meter.drain()
+      out += ((name, sec, meter.shuffleWriteBytes, gc))
       r
     }
 

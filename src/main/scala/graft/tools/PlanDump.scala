@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for selected declared queries —
   * the `.explain("formatted")` review loop the perf work rides on. */
 object PlanDump {
@@ -10,12 +8,7 @@ object PlanDump {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_agg", "q_filter_ops", "q_enrich_join", "q_multi_join",
         "q_tumbling_count", "q_similarity_topk")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-plan-dump")
     names.foreach { n =>
       println(s"\n===== $n =====")
       graft.SparkEntry.queries(n)(spark, dir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.Pq
@@ -27,13 +26,7 @@ object PqProbe {
     val baseDir = sys.env.getOrElse("VEC_SCALE_DIR", "/tmp/vec_scale")
     val nQueries = 64
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("pq-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("pq-probe")
     import spark.implicits._
 
     def du(path: String): Long = {

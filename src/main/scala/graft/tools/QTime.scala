@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic per-query timing tool: runs each named declared query N
   * times in one JVM (Bench's execution shape: `toRdd.count`, cache
   * clear + GC between runs, outside the timed region) and prints
@@ -17,14 +15,7 @@ object QTime {
     val iters = args.headOption.map(_.toInt).getOrElse(5)
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: QTime <iters> <query> [query...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304") // see functions/TopKAgg.scala scaladoc
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-qtime")
 
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** [[QTime]] variant that times each rep in a FRESH child session
   * (`spark.newSession()`): [[graft.ops.Memo]] keys on session
   * identity, so session-memoized stages (quality fit, BPE merges, the
@@ -18,14 +16,7 @@ object QTimeFresh {
     val iters = args.headOption.map(_.toInt).getOrElse(3)
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: QTimeFresh <iters> <query> [query...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304") // see functions/TopKAgg.scala scaladoc
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-qtime-fresh")
 
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     names.foreach { n =>

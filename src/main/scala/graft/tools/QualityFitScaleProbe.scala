@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scale probe for the trained quality classifier
@@ -24,13 +23,7 @@ object QualityFitScaleProbe {
     val sizes = args.headOption.getOrElse("250000,1000000,4000000")
       .split(",").map(_.trim.toLong).toSeq
     val baseDir = sys.env.getOrElse("CORPUS_SCALE_DIR", "/tmp/corpus_scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("quality-fit-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("quality-fit-scale")
 
     val results = sizes.map { n =>
       val dir = s"$baseDir/n$n"

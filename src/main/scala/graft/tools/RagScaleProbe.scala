@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.{Ivf, Rag}
@@ -39,22 +38,15 @@ object RagScaleProbe {
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 3, 10))
     val root = sys.env.getOrElse("RAG_SCALE_DIR", "/tmp/rag_scale")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("rag-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = graft.Session("rag-scale-probe")
+    val listener = StageMeter.install(spark)
 
     def staged[A](tag: String, s: Int)(body: => A): (A, String, Long, Double) = {
       listener.reset()
       val t0 = System.nanoTime()
       val out = body
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+      listener.drain()
       val by = listener.shuffleWriteBytes
       println(f"[s=$s] $tag%-8s $sec%7.1f s  shufMB=${by / 1e6}%.1f " +
         f"maxTaskMs=${listener.maxTaskMs} failed=${listener.failedTasks}")
@@ -133,7 +125,7 @@ object RagScaleProbe {
     }
     val json = s"""{"metric":"rag_scale","base_docs":$base,""" +
       s""""rag_cells":${Rag.RagCells},"n_probe":${Rag.RagProbe},""" +
-      s""""query_budget":64,"cpus":32,""" +
+      s""""query_budget":64,"cpus":${graft.Session.cores},""" +
       s""""heap_gb":${Runtime.getRuntime.maxMemory / 1073741824},""" +
       s""""verdict":{${verdicts.mkString(",")}},""" +
       s""""runs":[${runsJson.mkString(",")}]}"""

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Retrieval
 
@@ -31,14 +30,7 @@ object RetrievalScaleProbe {
     val sizes =
       if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(500000L, 2000000L, 8000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-retrieval-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-retrieval-scale")
 
     val results = sizes.map { n =>
       val docs = CorpusGenerator.corpus(spark, n)

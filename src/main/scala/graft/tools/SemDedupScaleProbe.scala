@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.VectorOps
 
@@ -32,14 +31,7 @@ object SemDedupScaleProbe {
     val sizes =
       if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(100000L, 500000L, 2000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-semdedup-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-semdedup-scale")
     import spark.implicits._
 
     val dims = VectorGenerator.Dims

@@ -89,16 +89,8 @@ object SketchScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-sketch-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-sketch-scale",
+      graft.functions.ConfGuard.ThresholdKey -> "10000000")
     val k = 256; val d = 4; val w = 256
 
     val scales = Seq(1L, 3L, 10L)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -32,17 +31,10 @@ object SkewProbe {
     val saltBuckets = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = Files.createTempDirectory("graft_skew").toString
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("skew-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // measure the raw skew, not AQE's rescue of it (see scaladoc)
-      .config("spark.sql.adaptive.skewJoin.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    // measure the raw skew, not AQE's rescue of it (see scaladoc)
+    val spark = graft.Session("skew-probe",
+      "spark.sql.adaptive.skewJoin.enabled" -> "false")
+    val listener = StageMeter.install(spark)
 
     // hub fact: rep copies of events, ~30% of rows on user 7 —
     // materialized as 32 uniform files so the timed queries below
@@ -76,7 +68,7 @@ object SkewProbe {
         val sec = (System.nanoTime() - t0) / 1e9
         // drain async task-end events — the unsalted straggler is the
         // LAST task to finish, i.e. exactly the one still in flight
-        org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+        listener.drain()
         System.gc()
         (sec, listener.maxTaskMs, listener.tasks.toLong)
       }.drop(1).sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -43,14 +42,7 @@ object Soak {
     // + checkpoint commit) over more rows — the lever for the top of
     // the ladder, at the price of per-event latency
     val triggerMs = args.lift(1).map(_.toLong).getOrElse(1000L)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-soak")
     // SPARK_GRAFT_ROCKSDB=1 → run the ladder's streaming-agg state on
     // the RocksDB provider (the 100 TB keyed-state configuration)
     val rocks = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")

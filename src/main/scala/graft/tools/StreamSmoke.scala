@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Runtime smoke for the streaming pipeline: writes Debezium-envelope
   * JSON lines to a drop directory, runs the file-source pipeline with
@@ -10,15 +9,8 @@ import org.apache.spark.sql.SparkSession
   * search partitioned by event_date, analytics top-K rows. */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session("graft-stream-smoke")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val root = Files.createTempDirectory("graft_stream_smoke").toString
     val dropDir = s"$root/drop"

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the SUBSTRING-DEDUP family (VERDICT r12 #7):
@@ -32,15 +31,7 @@ object SubstrScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.map(_.toLong).getOrElse(20000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-substr-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-substr-scale")
     val root = Files.createTempDirectory("graft_substr_scale").toString
 
     val scales = Seq(1, 3, 10)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.{Ivf, Pq}
@@ -54,28 +54,22 @@ object VecDimProbe {
     val rerankC = 1000
     val dir = sys.env.getOrElse("VEC_DIM_DIR", s"/tmp/vec_dim/n${n}_d$dims")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("vec-dim-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // 1.5 GB over 32 files coalesces to ~12 input partitions at the
-      // default 128 MB split — a 32-core box runs the map-side fit /
-      // encode at 12-wide with maxTask ≈ wall. 32 MB splits restore
-      // full width locally; on a real cluster the default is right
-      // (the corpus is many files ≫ cores).
-      .config("spark.sql.files.maxPartitionBytes", s"${32 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 1.5 GB over 32 files coalesces to ~12 input partitions at the
+    // default 128 MB split — a 32-core box runs the map-side fit /
+    // encode at 12-wide with maxTask ≈ wall. 32 MB splits restore
+    // full width locally; on a real cluster the default is right
+    // (the corpus is many files ≫ cores).
+    val spark = graft.Session("vec-dim-probe",
+      "spark.sql.files.maxPartitionBytes" -> s"${32 * 1024 * 1024}")
     import spark.implicits._
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = StageMeter.install(spark)
 
     def timed[T](tag: String)(body: => T): (T, Double) = {
       listener.reset()
       val t0 = System.nanoTime()
       val r = body
       val sec = (System.nanoTime() - t0) / 1e9
+      listener.drain()
       println(f"[d=$dims n=$n] $tag%-14s $sec%8.1f s  maxTaskMs=${listener.maxTaskMs} " +
         f"failed=${listener.failedTasks}")
       (r, sec)
@@ -242,7 +236,7 @@ object VecDimProbe {
       f"compression=${rawBytes.toDouble / codeBytes}%.1fx")
     val json = s"""{"metric":"vec_dim","n":$n,"dims":$dims,"k_cells":$KCells,""" +
       s""""n_probe":$NProbe,"n_queries":$NQueries,"clusters":$NClusters,""" +
-      s""""centroid_ref_bytes":$centroidBytes,"cpus":32,""" +
+      s""""centroid_ref_bytes":$centroidBytes,"cpus":${graft.Session.cores},""" +
       s""""gen_sec":${f"$genSec%.2f"},"fit_sec":${f"$fitSec%.2f"},""" +
       s""""index_sec":${f"$idxSec%.2f"},""" +
       s""""brute_batch_sec":${f"$bruteSec%.2f"},"brute_max_task_ms":$bruteMaxTask,""" +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.{Ivf, Pq}
@@ -47,23 +46,16 @@ object VecScale100Probe {
     val outJson = args.drop(1).headOption.getOrElse("VEC_SCALE_100X.json")
     val baseDir = sys.env.getOrElse("VEC_SCALE_DIR", "/tmp/vec_scale")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("vec-scale-100x-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("vec-scale-100x-probe")
     import spark.implicits._
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = StageMeter.install(spark)
 
     def staged[A](tag: String, n: Long)(body: => A): (A, String, Long, Double) = {
       listener.reset()
       val t0 = System.nanoTime()
       val out = body
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+      listener.drain()
       val by = listener.shuffleWriteBytes
       val sp = listener.spillBytes
       println(f"[n=$n] $tag%-10s $sec%8.1f s  shufMB=${by / 1e6}%.1f " +
@@ -169,7 +161,7 @@ object VecScale100Probe {
     }
     val json = s"""{"metric":"vec_scale_100x","dims":$Dims,""" +
       s""""k_cells":$KCells,"n_probe":$NProbe,"rerank_c":$RerankC,""" +
-      s""""m":$PqM,"k":$PqK,"n_queries":$NQueries,"cpus":32,""" +
+      s""""m":$PqM,"k":$PqK,"n_queries":$NQueries,"cpus":${graft.Session.cores},""" +
       s""""heap_gb":${Runtime.getRuntime.maxMemory / 1073741824},""" +
       s""""recalls":[${recalls.mkString(",")}],""" +
       s""""verdict":{${verdicts.mkString(",")}},""" +

@@ -55,16 +55,9 @@ object VecScaleProbe {
     val outJson = args.drop(1).headOption.getOrElse("VEC_SCALE.json")
     val baseDir = sys.env.getOrElse("VEC_SCALE_DIR", "/tmp/vec_scale")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("vec-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("vec-scale-probe")
     import spark.implicits._
-    val listener = new DedupScaleProbe.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = StageMeter.install(spark)
 
     // returns (metricsJson, collected top-10 id sets per query)
     def timedTopk(tag: String, n: Long)(df: => DataFrame)
@@ -73,7 +66,7 @@ object VecScaleProbe {
       val t0 = System.nanoTime()
       val rows = df.collect()
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
+      listener.drain()
       spark.sharedState.cacheManager.clearCache()
       val got = rows.map(r => r.getLong(0) -> r.getLong(1))
         .groupBy(_._1).map { case (q, vs) => q -> vs.map(_._2).toSet }
@@ -180,7 +173,7 @@ object VecScaleProbe {
 
     val json = s"""{"metric":"vec_scale","dims":$Dims,"clusters":100,""" +
       s""""k_cells":$KCells,"n_probe":$NProbe,"n_queries":$NQueries,""" +
-      s""""lsh_bits":$LshBits,"cpus":32,"runs":[${results.mkString(",")}]}"""
+      s""""lsh_bits":$LshBits,"cpus":${graft.Session.cores},"runs":[${results.mkString(",")}]}"""
     Files.writeString(Paths.get(outJson), json)
     println(json)
     spark.stop()

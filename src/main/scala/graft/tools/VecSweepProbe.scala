@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.ops.Ivf
@@ -21,13 +20,7 @@ object VecSweepProbe {
     val dir = s"${sys.env.getOrElse("VEC_SCALE_DIR", "/tmp/vec_scale")}/n$n"
     val probes = Seq(1, 2, 4, 8, 16, 32)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("vec-sweep-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("vec-sweep-probe")
     import spark.implicits._
 
     if (!new java.io.File(s"$dir/embeddings.parquet").exists()) {

@@ -83,11 +83,7 @@ object VectorGenerator {
     val nClusters = args.lift(2).map(_.toInt).getOrElse(100)
     val dims = args.lift(3).map(_.toInt).getOrElse(Dims)
     val zipfS = args.lift(4).map(_.toDouble).getOrElse(0.0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-vector-generator")
     write(spark, outDir, n.toLong, nClusters, dims = dims, zipfS = zipfS)
     println(s"""{"metric":"vectors","n":$n,"clusters":$nClusters,""" +
       s""""dims":$dims,"zipf_s":$zipfS,"dir":"$outDir"}""")
